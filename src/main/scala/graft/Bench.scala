@@ -191,8 +191,7 @@ object Bench {
     val reusable = meta.isFile && {
       try {
         val m = new String(java.nio.file.Files.readAllBytes(meta.toPath), "UTF-8")
-        m.contains(s""""n":$n""") && m.contains(s""""e":$e""") &&
-        m.contains(s""""blocks":$blocks""") &&
+        graft.tools.KernelPrep.metaMatches(m, n, e, blocks) &&
         new java.io.File(s"$path-adj-dst").isDirectory &&
         new java.io.File(s"$path-adj-src").isDirectory
       } catch { case _: Exception => false }

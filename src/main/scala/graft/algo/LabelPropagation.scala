@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 
 /** Synchronous label propagation for community detection (north rule).
   *
@@ -42,24 +42,21 @@ import graft.graph.LinkGraph
   */
 object LabelPropagation {
 
-  /** Below this bound on the folded edge set (≤ 2|E| undirected entries at
-    * 24 B each) the supersteps run DRIVER-RESIDENT: one collect of the cached
-    * folded edges, a local undirected fold, and k array/hash passes — the
-    * same labels as the distributed loop (vote sums are commutative per pair
-    * and exact for fold-multiplicity weights; the argmax tie-break is the
-    * identical (w, smallest-label) order) without paying 3 exchanges per
-    * superstep for sub-second work. Same regime split as
-    * PageRankEngine.BroadcastThresholdBytes; a 100 TB graph takes the
-    * distributed loop. Mutable test hook — set 0 to force distributed.
-    */
-  var ResidentEdgeBytes: Long = 64L * 1024 * 1024
+  /** Default budget, reported by the benchmark, read by no engine code. */
+  val ResidentEdgeBytes: Long = Residency.Default.driverBytes
 
-  /** Returns (vid, label) after `iterations` synchronous supersteps. */
+  /** Returns (vid, label) after `iterations` synchronous supersteps. A
+    * resident plan runs them on the driver: one collect of the cached folded
+    * edges, a local undirected fold, and k array/hash passes — the same labels
+    * as the distributed loop (vote sums are commutative per pair and exact
+    * for fold-multiplicity weights; the argmax tie-break is the identical
+    * (w, smallest-label) order) without 3 exchanges per superstep.
+    */
   def run(graph: LinkGraph, iterations: Int = 10, pinEvery: Int = 1): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
 
-    if (graph.numEdges * 48 < ResidentEdgeBytes && graph.numVertices <= Int.MaxValue.toLong)
+    if (graph.resident(Residency.Op.LabelPropagation))
       return residentRun(graph, iterations)
 
     val p = math.max(1, spark.sparkContext.defaultParallelism)
@@ -81,10 +78,10 @@ object LabelPropagation {
 
     // pinned frames report default (huge) stats, so without the hint the
     // planner sort-merge-joins the n-row label frame against the cached edge
-    // table — re-sorting 2|E| rows per superstep. Broadcast only below the
-    // size bound; at cluster scale the shuffle join is the right shape.
+    // table — re-sorting 2|E| rows per superstep. Broadcast only while the
+    // plan allows; at cluster scale the shuffle join is the right shape.
     val hintSmall: DataFrame => DataFrame =
-      if (graph.numVertices * 16 < 64L * 1024 * 1024) broadcast(_) else identity
+      if (graph.resident(Residency.Op.LabelBroadcast)) broadcast(_) else identity
 
     var (labels, freeLabels) = graft.graph.Lineage.pin(
       graph.vertexDict.select($"vid", $"vid".as("label")).toDF())

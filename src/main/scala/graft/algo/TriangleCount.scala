@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 
 /** Degree-ordered triangle counting + clustering coefficient (north rule).
   *
@@ -22,17 +22,8 @@ import graft.graph.LinkGraph
   */
 object TriangleCount {
 
-  /** Below this bound on the folded edge cache (16 B/edge) the count runs
-    * DRIVER-RESIDENT: one collect of the cached edges, local dedup + degree
-    * orientation + sorted-adjacency wedge closing. Counts are integers, so the
-    * result is EXACTLY the distributed plan's (same triangles, same corners) —
-    * the same regime split as ConnectedComponents.ResidentEdgeBytes; a 100 TB
-    * graph takes the self-join path. Mutable test hook — 0 forces distributed.
-    */
-  var ResidentEdgeBytes: Long = 64L * 1024 * 1024
-
-  private def residentOk(graph: LinkGraph): Boolean =
-    graph.numEdges * 16 < ResidentEdgeBytes && graph.numVertices <= Int.MaxValue.toLong
+  /** Default budget, reported by the benchmark, read by no engine code. */
+  val ResidentEdgeBytes: Long = Residency.Default.driverBytes
 
   /** (triangles, undirected simple degree) per vertex, driver-resident.
     * Mirrors the distributed plan exactly: dedup to u<v simple edges, orient
@@ -197,7 +188,7 @@ object TriangleCount {
   def perVertexTriangles(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    if (residentOk(graph))
+    if (graph.resident(Residency.Op.Triangles))
       return broadcastVertexFrame(graph, residentData(graph)._1, "triangles")
     val tris = perEdgeTriangles(graph)
     val corners = tris.select($"a".as("vid"))
@@ -217,7 +208,7 @@ object TriangleCount {
   def clusteringCoefficients(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    if (residentOk(graph)) {
+    if (graph.resident(Residency.Op.Triangles)) {
       val (tri, degArr) = residentData(graph)
       val bt = spark.sparkContext.broadcast(tri)
       val bd = spark.sparkContext.broadcast(degArr)

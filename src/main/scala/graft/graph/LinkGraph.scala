@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -16,6 +17,7 @@ import graft.model._
   *                    (csc_matrix duplicate-summing, pagerank.py:638-640)
   * @param inDegrees   (vid, cIn)  weighted in-degree  = column sums, pagerank.py:170
   * @param outDegrees  (vid, cOut) weighted out-degree = row sums,    pagerank.py:445
+  * @param residency   which operators run on the driver (see [[Residency]])
   */
 final class LinkGraph(
     val spark: SparkSession,
@@ -24,9 +26,12 @@ final class LinkGraph(
     val numVertices: Long,
     val numBlocks: Int,
     val blockSize: Long,
-    private[graft] val knownNumEdges: Long = -1L
+    private[graft] val knownNumEdges: Long = -1L,
+    val residency: Residency = Residency.Default
 ) extends Serializable {
   import spark.implicits._
+
+  private[graft] def resident(op: Residency.Op): Boolean = residency.resident(op, numVertices, numEdges)
 
   /** Bench/restore hooks: a pre-assembled blocked adjacency (e.g. read back
     * from parquet written by a prior process) replaces the fold+sort+assemble
@@ -51,14 +56,25 @@ final class LinkGraph(
 
   /** Folded edges collected ONCE for every driver-resident consumer (CC, LPA,
     * triangle counting, the resident parts assembler) — they each used to pay
-    * their own collect of the same cached frame. Lazy: only consumers below
-    * their own size gates touch it.
+    * their own collect of the same cached frame. Lazy: only consumers the
+    * residency plan keeps on the driver touch it. A build path that already
+    * holds the array (or a [[withResidency]] view) replaces the collect.
     */
-  @volatile private[graft] var edgesLocalPre: Option[Array[Edge]] = None
-  lazy val edgesLocal: Array[Edge] = edgesLocalPre.getOrElse(edges.collect())
+  @transient @volatile private var edgesLocalSource: Option[() => Array[Edge]] = None
+  lazy val edgesLocal: Array[Edge] =
+    edgesLocalSource match { case Some(source) => source(); case None => edges.collect() }
+
+  /** This graph's dictionary, edges and [[edgesLocal]] under another plan:
+    * only operators that run after the build (layouts onward) are re-planned.
+    */
+  private[graft] def withResidency(r: Residency): LinkGraph = {
+    val v = new LinkGraph(spark, vertexDict, edges, numVertices, numBlocks, blockSize, numEdges, r)
+    v.edgesLocalSource = Some(() => edgesLocal)
+    v
+  }
 
   /** True when the blocked adjacency can be ASSEMBLED on the driver: no
-    * prebuilt injection, adjacency bytes under the gate, vids in Int range.
+    * prebuilt injection, and the residency plan keeps assembly resident.
     * The driver assembly is bit-identical to [[buildParts]] (same wNorm from
     * the same distributed inDegrees cache, same total sort order, same
     * assembler) — see [[assembleLocal]].
@@ -66,8 +82,7 @@ final class LinkGraph(
   private def residentAssembleOk: Boolean =
     prebuiltDstParts.isEmpty && prebuiltGatherParts.isEmpty &&
       prebuiltDstPartsLaidOut.isEmpty && prebuiltGatherPartsLaidOut.isEmpty &&
-      numVertices <= Int.MaxValue.toLong &&
-      numEdges * 16 < LinkGraph.ResidentAssembleBytes
+      resident(Residency.Op.Assembly)
 
   /** Driver twin of [[buildParts]]. deg comes from a collect of the SAME
     * distributed inDegrees cache (so wNorm is the identical IEEE division on
@@ -109,6 +124,10 @@ final class LinkGraph(
     new AdjPartAssembler(it, bs, LinkGraph.MaxEdgesPerPart).toArray
   }
 
+  /** Broadcasts behind [[laidOutRdd]]s, destroyed by [[unpersistAll]]. */
+  @transient private[graft] val laidOutBroadcasts =
+    scala.collection.mutable.ArrayBuffer.empty[Broadcast[Array[Array[AdjPart]]]]
+
   /** Distribute driver-assembled parts in the build's exact layout: partition
     * b = block b's parts in assembler order (the data rides a broadcast; the
     * establishing shuffle moves numBlocks ints).
@@ -119,6 +138,7 @@ final class LinkGraph(
     parts.foreach(p => byBlock(p.blockId) += p)
     val grouped: Array[Array[AdjPart]] = byBlock.map(_.toArray)
     val b = spark.sparkContext.broadcast(grouped)
+    laidOutBroadcasts.synchronized { laidOutBroadcasts += b }
     spark.sparkContext
       .parallelize(0 until nb, nb)
       .map(i => (i, i))
@@ -128,7 +148,7 @@ final class LinkGraph(
         preservesPartitioning = true)
   }
 
-  /** Src-major parts assembled on the driver when the gate allows (shared by
+  /** Src-major parts assembled on the driver when the plan allows (shared by
     * [[gatherPartsLocal]] and [[gatherPartsRdd]]).
     */
   @transient private lazy val gatherAssembled: Option[Array[AdjPart]] =
@@ -149,7 +169,7 @@ final class LinkGraph(
 
   /** Full per-vertex degree table (zero-filled). Columns: vid, inDeg, outDeg.
     *
-    * Driver-resident regime: when the edge set fits the assemble gate AND
+    * Driver-resident regime: when the plan keeps the degree table resident AND
     * every weight is a (magnitude-bounded) integer, the degree sums are exact
     * in any order, so one driver pass over [[edgesLocal]] replaces the
     * two-broadcast-join build. Rows are emitted vid-ascending in the SAME
@@ -181,8 +201,7 @@ final class LinkGraph(
   }
 
   private def residentDegreesOk: Boolean =
-    numVertices <= Int.MaxValue.toLong &&
-      numEdges * 16 < LinkGraph.ResidentAssembleBytes &&
+    resident(Residency.Op.DegreeTable) &&
       numEdges <= (1L << 21) && // with |w| ≤ 2³¹: Σ|w| ≤ 2⁵² — exact in double
       edgesLocal.forall(e =>
         e.weight == math.rint(e.weight) && math.abs(e.weight) <= (1L << 31).toDouble)
@@ -324,7 +343,7 @@ final class LinkGraph(
   }
 
   /** Src-major parts COLLECTED to the driver once (the driver-local kernel's
-    * input, gated by PageRankEngine.LocalGatherBytes): collect order equals
+    * input, when the plan keeps the local gather resident): collect order equals
     * [[gatherPartsRdd]]'s partition order, so a driver loop that accumulates
     * per-part slices in array order reproduces the cluster path's gx sums
     * bit-for-bit. The parts carry the SAME wNorm values the distributed
@@ -409,15 +428,21 @@ final class LinkGraph(
     */
   def inducedPrefix(k: Long): LinkGraph = {
     val kk = math.min(k, numVertices)
-    LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk)
+    LinkGraph.fromDenseWeighted(
+      spark, edges.filter($"src" < kk && $"dst" < kk), kk, residency = residency)
   }
 
   /** Release every cache this graph MATERIALIZED. Each lazy layout checks its
     * built flag first — unconditionally touching the lazy vals used to FORCE
     * a full build of layouts the caller never used (e.g. a resident-regime
     * run paid for the dst-major columnar build inside its own teardown).
+    * Driver-assembled adjacency is released by destroying its broadcasts.
     */
   def unpersistAll(): Unit = {
+    laidOutBroadcasts.synchronized {
+      laidOutBroadcasts.foreach(_.destroy())
+      laidOutBroadcasts.clear()
+    }
     if (adjPartsBuilt) adjParts.unpersist()
     if (adjPartsByBlockBuilt) adjPartsByBlock.unpersist(false)
     if (gatherPartsBuilt) gatherPartsRdd.unpersist()
@@ -474,28 +499,10 @@ object LinkGraph {
   /** Cap on edges per adjacency part — bounds single-task work under skew. */
   val MaxEdgesPerPart: Int = 2 << 20
 
-  /** Below this bound on the folded edge frame (~24 B/row) the vertex
-    * dictionary of [[fromFoldedEdgeList]] is built DRIVER-RESIDENT from one
-    * partial-aggregated distinct job (same two-regime pattern as
-    * PageRankEngine.BroadcastThresholdBytes); the 100 TB path keeps the
-    * two-phase global-sort dictionary. The remap join is distributed in both
-    * regimes. Mutable test hook — set 0 to force the distributed build.
-    */
-  var ResidentBuildBytes: Long = 96L * 1024 * 1024
-
-  /** Below this bound on the folded edge set (~16 B/edge) the blocked
-    * adjacency is assembled ON THE DRIVER (bit-identical — see
-    * [[LinkGraph.assembleLocal]]) instead of paying join + exchange + sort +
-    * cache jobs per orientation. Mutable test hook — 0 forces the cluster
-    * build.
-    */
-  var ResidentAssembleBytes: Long = 64L * 1024 * 1024
-
-  /** Raw-pair cap for [[fromEdgeList]]'s resident-fold probe (a limit-collect
-    * of the unfolded pairs; ~16 B/row, so the default caps the probe at
-    * ~32 MB). 0 disables the probe entirely. Mutable test hook.
-    */
-  var ResidentFoldRows: Long = 2L * 1024 * 1024
+  /** Default budgets, reported by the benchmark, read by no engine code. */
+  val ResidentBuildBytes: Long = Residency.Default.driverBytes
+  val ResidentAssembleBytes: Long = Residency.Default.driverBytes
+  val ResidentFoldRows: Long = Residency.Default.foldProbeRows
 
   /** Quicksort `keys` ascending, permuting `vals` alongside (median-of-three
     * pivot, insertion sort below 32). Deterministic for a given input order;
@@ -577,10 +584,11 @@ object LinkGraph {
       spark: SparkSession,
       rawEdges: DataFrame,
       numBlocks: Int = 0,
-      idMode: IdMode = IdMode.Compacted
+      idMode: IdMode = IdMode.Compacted,
+      residency: Residency = Residency.Default
   ): LinkGraph = {
     import spark.implicits._
-    if (idMode == IdMode.Compacted && ResidentFoldRows > 0) {
+    if (idMode == IdMode.Compacted && residency.foldProbeRows > 0) {
       // Resident-fold probe (guide §1.2 step 1): ONE incremental limit-collect
       // of the raw pairs replaces the fold aggregation, the dictionary
       // distinct, and the two remap joins — three whole plan shapes whose
@@ -591,13 +599,13 @@ object LinkGraph {
       // after a handful of partitions (executeTake grows 1, 2, 4, … tasks),
       // so a 100 TB caller pays one cheap probe and takes the distributed
       // pipeline unchanged.
-      val cap = math.min(ResidentFoldRows, Int.MaxValue.toLong - 2).toInt
+      val cap = math.min(residency.foldProbeRows, Int.MaxValue.toLong - 2).toInt
       val probe = rawEdges
         .select($"src".cast("long"), $"dst".cast("long"))
         .limit(cap + 1)
         .as[(Long, Long)]
         .collect()
-      if (probe.length <= cap) return residentFromPairs(spark, probe, numBlocks)
+      if (residency.foldResident(probe.length)) return residentFromPairs(spark, probe, numBlocks, residency)
     }
     fromFoldedEdgeList(
       spark,
@@ -606,7 +614,8 @@ object LinkGraph {
         .groupBy($"src", $"dst")
         .agg(count(lit(1)).cast("double").as("weight")),
       numBlocks,
-      idMode)
+      idMode,
+      residency)
   }
 
   /** Driver fold + dictionary + remap of a collected raw pair multiset —
@@ -618,7 +627,8 @@ object LinkGraph {
   private def residentFromPairs(
       spark: SparkSession,
       pairs: Array[(Long, Long)],
-      numBlocks: Int
+      numBlocks: Int,
+      residency: Residency
   ): LinkGraph = {
     import spark.implicits._
     val counts = new java.util.HashMap[(Long, Long), Array[Long]](pairs.length * 2)
@@ -675,8 +685,8 @@ object LinkGraph {
     edges.count()
     val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, m)
     val bs = (n + blocks - 1) / math.max(blocks, 1)
-    val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), m)
-    g.edgesLocalPre = Some(remapped) // the resident consumers' copy, no collect
+    val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), m, residency)
+    g.edgesLocalSource = Some(() => remapped) // the resident consumers' copy, no collect
     g
   }
 
@@ -690,7 +700,8 @@ object LinkGraph {
       spark: SparkSession,
       foldedEdges: DataFrame,
       numBlocks: Int = 0,
-      idMode: IdMode = IdMode.Compacted
+      idMode: IdMode = IdMode.Compacted,
+      residency: Residency = Residency.Default
   ): LinkGraph = {
     import spark.implicits._
 
@@ -713,14 +724,15 @@ object LinkGraph {
         require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
         val n = bounds.getLong(0) + 1
         val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, folded.count())
-        val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks)
+        val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks, residency)
         g.numEdges // materialize the graph's edge cache through `folded`
         g
 
       case IdMode.Compacted =>
         val foldedCount = folded.count() // materializes the scoped cache once
         val (dict, n) =
-          if (foldedCount * 24 < ResidentBuildBytes) {
+          // n ≤ 2·|E|: the dictionary's vertex count before it exists
+          if (residency.resident(Residency.Op.Dictionary, 2 * foldedCount, foldedCount)) {
             // Driver-resident dictionary (guide §1.2 step 1: remove passes):
             // one partial-aggregated distinct job collects the ≤ 2·|E| ids
             // (the exchange carries only per-partition-distinct rows, never
@@ -764,7 +776,7 @@ object LinkGraph {
 
         val edges = remapped.persist(StorageLevel.MEMORY_AND_DISK)
         // inner joins on a complete dictionary keep every folded row
-        val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), foldedCount)
+        val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), foldedCount, residency)
         edges.count() // materialize the edge cache while `folded` is still held
         g
     } finally folded.unpersist(false)
@@ -781,7 +793,8 @@ object LinkGraph {
       spark: SparkSession,
       edges: Dataset[Edge],
       numVertices: Long,
-      numBlocks: Int = 0
+      numBlocks: Int = 0,
+      residency: Residency = Residency.Default
   ): LinkGraph = {
     import spark.implicits._
     val dict = spark.range(numVertices).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
@@ -795,7 +808,7 @@ object LinkGraph {
     val cnt = if (numBlocks > 0) -1L else positive.count()
     val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, numVertices, cnt)
     val bs = (numVertices + blocks - 1) / math.max(blocks, 1)
-    new LinkGraph(spark, dict, positive, numVertices, blocks, math.max(bs, 1), cnt)
+    new LinkGraph(spark, dict, positive, numVertices, blocks, math.max(bs, 1), cnt, residency)
   }
 
   /** Graph whose blocked adjacency was PRE-ASSEMBLED by a prior process and
@@ -813,14 +826,15 @@ object LinkGraph {
       numBlocks: Int,
       numEdges: Long,
       dstParts: Option[Dataset[AdjPart]] = None,
-      gatherParts: Option[Dataset[AdjPart]] = None
+      gatherParts: Option[Dataset[AdjPart]] = None,
+      residency: Residency = Residency.Default
   ): LinkGraph = {
     import spark.implicits._
     require(numBlocks > 0, "fromPrebuiltParts needs the geometry the parts were built with")
     val dict = spark.range(numVertices).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
     val bs = (numVertices + numBlocks - 1) / numBlocks
-    val g = new LinkGraph(
-      spark, dict, spark.emptyDataset[Edge], numVertices, numBlocks, math.max(bs, 1), numEdges)
+    val g = new LinkGraph(spark, dict, spark.emptyDataset[Edge], numVertices, numBlocks,
+      math.max(bs, 1), numEdges, residency)
     g.prebuiltDstParts = dstParts.map(_.rdd)
     g.prebuiltGatherParts = gatherParts.map(_.rdd)
     g

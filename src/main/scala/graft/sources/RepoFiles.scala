@@ -20,21 +20,26 @@ object RepoFiles {
 
   val Langs: Seq[String] = Seq("scala", "python", "java", "go")
 
+  /** Digits a token id is zero-padded to: at least 3, and enough for the
+    * largest id `vocab − 1` (lpad truncates longer strings).
+    */
+  private def tokenWidth(vocab: Int): Int = math.max(3, (vocab - 1).toString.length)
+
   /** Import-line syntax per language (the extraction regex must invert it). */
-  private def importLine(lang: Column, token: Column): Column = {
-    val lib = concat(lit("lib"), lpad(token.cast("string"), 3, "0"))
+  private def importLine(lang: Column, token: Column, width: Int): Column = {
+    val lib = concat(lit("lib"), lpad(token.cast("string"), width, "0"))
     when(lang === "scala", concat(lit("import "), lib, lit("._")))
       .when(lang === "python", concat(lit("import "), lib))
       .when(lang === "java", concat(lit("import "), lib, lit(".*;")))
       .otherwise(concat(lit("import \""), lib, lit("\""))) // go
   }
 
-  /** Extraction regex per language, capture group 1 = libNNN. */
+  /** Extraction regex per language, capture group 1 = libNNN (3+ digits). */
   def importPattern(lang: String): String = lang match {
-    case "scala" => """import (lib\d{3})\._"""
-    case "python" => """import (lib\d{3})(?:\n|$)"""
-    case "java" => """import (lib\d{3})\.\*;"""
-    case "go" => """import "(lib\d{3})""""
+    case "scala" => """import (lib\d{3,})\._"""
+    case "python" => """import (lib\d{3,})(?:\n|$)"""
+    case "java" => """import (lib\d{3,})\.\*;"""
+    case "go" => """import "(lib\d{3,})""""
   }
 
   /** Deterministic repo-file table.
@@ -74,14 +79,8 @@ object RepoFiles {
             map(lit("scala"), lit("scala"), lit("python"), lit("py"),
               lit("java"), lit("java"), lit("go"), lit("go")),
             $"lang")))
-    // K import lines per file, K in [1, 8]; token ids power-skewed toward 0
-    val k = (pmod(xxhash64($"repo", $"path", lit(seed + 1)), lit(8)) + 1).cast("int")
-    def tokenAt(i: Column): Column =
-      floor(
-        lit(vocab) * pow(
-          pmod(xxhash64(col("repo"), col("path"), i, lit(seed + 2)), lit(1000000)).cast("double") / 1000000.0,
-          2.0)).cast("int")
-    val lines = transform(sequence(lit(0), k - 1), i => importLine(col("lang"), tokenAt(i)))
+    val width = tokenWidth(vocab)
+    val lines = transform(lineSeq(seed), i => importLine(col("lang"), tokenAt(i, vocab, seed), width))
     withLang
       .select(
         $"repo",
@@ -93,6 +92,23 @@ object RepoFiles {
           lit("\n"),
           array_join(lines, "\n")).as("content"))
   }
+
+  /** Line indices 0..K−1 of a file: K import lines, K in [1, 8]. */
+  private def lineSeq(seed: Long): Column =
+    sequence(lit(0), (pmod(xxhash64(col("repo"), col("path"), lit(seed + 1)), lit(8)) + 1).cast("int") - 1)
+
+  /** Token id of line `i`, power-skewed toward 0. */
+  private def tokenAt(i: Column, vocab: Int, seed: Long): Column =
+    floor(
+      lit(vocab) * pow(
+        pmod(xxhash64(col("repo"), col("path"), i, lit(seed + 2)), lit(1000000)).cast("double") / 1000000.0,
+        2.0)).cast("int")
+
+  /** (repo, token id) of every import line [[table]] generates for `files`
+    * — the ids before rendering, to check extraction against.
+    */
+  private[graft] def generatedTokens(files: DataFrame, vocab: Int, seed: Long = 42L): DataFrame =
+    files.select(col("repo"), explode(transform(lineSeq(seed), i => tokenAt(i, vocab, seed))).as("token"))
 
   /** Per-row invariant column for the input-hint check: sha2(content, 256). */
   def withContentHash(files: DataFrame): DataFrame =

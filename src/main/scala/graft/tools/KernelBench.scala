@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 import graft.algo.PageRank
 import graft.sources.SkewedEdges
 
@@ -85,12 +85,8 @@ object KernelBench {
     val e = args(2).toLong
     val iters = if (args.length > 3) args(3).toInt else 12
     val regime = if (args.length > 4) args(4) else "resident"
-    if (regime == "distributed") graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-    // probe hook: tighten the per-task slab budget so a run can prove the
-    // mid-block flush path fires (and stays correct/fast) at a chosen scale
-    sys.env.get("KB_SLAB_BUDGET").foreach { b =>
-      graft.engine.PageRankEngine.SlabBudgetBytes = b.toLong
-    }
+    val residency =
+      if (regime == "distributed") Residency(driverBytes = 0L) else Residency.Default
 
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -126,21 +122,20 @@ object KernelBench {
       case Some(base) =>
         val meta = new String(
           java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$base-meta.json")), "UTF-8")
-        def metaNum(key: String): Long =
-          s""""$key":(-?\\d+)""".r.findFirstMatchIn(meta)
-            .getOrElse(throw new IllegalStateException(s"no $key in $base-meta.json")).group(1).toLong
-        require(metaNum("n") == n && metaNum("blocks") == numBlocks,
-          s"prep meta mismatch: $meta vs n=$n blocks=$numBlocks")
+        require(KernelPrep.metaMatches(meta, n, e, numBlocks),
+          s"prep meta mismatch: $meta vs n=$n e=$e blocks=$numBlocks")
+        val folded = KernelPrep.metaField(meta, "folded_edges")
+          .getOrElse(throw new IllegalStateException(s"no folded_edges in $base-meta.json"))
         val dstBin = new java.io.File(s"$base-adj-dst-bin")
         val srcBin = new java.io.File(s"$base-adj-src-bin")
         if (regime == "distributed" && dstBin.isDirectory) {
           // laid-out binary restore: no shuffle, no parquet decode (PartIO)
-          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"))
+          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, folded, residency = residency)
           g0.prebuiltDstPartsLaidOut =
             Some(PartIO.readLaidOut(spark.sparkContext, dstBin.getAbsolutePath, numBlocks))
           g0
         } else if (regime != "distributed" && srcBin.isDirectory) {
-          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"))
+          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, folded, residency = residency)
           g0.prebuiltGatherPartsLaidOut =
             Some(PartIO.readLaidOut(spark.sparkContext, srcBin.getAbsolutePath, numBlocks).values)
           g0
@@ -151,7 +146,7 @@ object KernelBench {
           val src =
             if (regime == "distributed") None
             else Some(spark.read.parquet(s"$base-adj-src").as[graft.model.AdjPart])
-          LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"), dst, src)
+          LinkGraph.fromPrebuiltParts(spark, n, numBlocks, folded, dst, src, residency)
         }
       case None =>
         val folded0 = sys.env.get("KB_EDGES_PATH") match {
@@ -162,7 +157,8 @@ object KernelBench {
               .agg(org.apache.spark.sql.functions.count(
                 org.apache.spark.sql.functions.lit(1)).cast("double").as("weight"))
         }
-        LinkGraph.fromDenseWeighted(spark, folded0.as[graft.model.Edge], n, numBlocks = numBlocks)
+        LinkGraph.fromDenseWeighted(
+          spark, folded0.as[graft.model.Edge], n, numBlocks = numBlocks, residency = residency)
     }
     phase("graph-defined")
     // build + cache the regime's adjacency layout before timing

@@ -27,6 +27,20 @@ import graft.sources.SkewedEdges
   * (blocks = 0 or absent: skip the adjacency prebuild, edges only)
   */
 object KernelPrep {
+
+  /** Whole-number field `key` of a meta JSON object, None when absent. The
+    * match is anchored on both sides, so `"e":20000000` never answers a
+    * lookup that a substring test for `"e":2000000` would accept.
+    */
+  def metaField(meta: String, key: String): Option[Long] =
+    (s"""[{,]\\s*"${java.util.regex.Pattern.quote(key)}"\\s*:\\s*(-?\\d+)\\s*[,}]""").r
+      .findFirstMatchIn(meta).map(_.group(1).toLong)
+
+  /** True when a prep meta file records exactly this (n, e, blocks). */
+  def metaMatches(meta: String, n: Long, e: Long, blocks: Int): Boolean =
+    metaField(meta, "n").contains(n) && metaField(meta, "e").contains(e) &&
+      metaField(meta, "blocks").contains(blocks.toLong)
+
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val n = args(1).toLong

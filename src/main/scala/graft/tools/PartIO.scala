@@ -20,6 +20,8 @@ import graft.model.AdjPart
   * outright). Restore is bit-identical: same parts, same order, same layout.
   *
   * Format per file: [numParts][per part: blockId partId lens + raw arrays].
+  * The writer emits one file per partition, empty ones included, so a
+  * missing file is a damaged directory and the restore fails on it.
   */
 object PartIO {
 
@@ -27,11 +29,15 @@ object PartIO {
     new File(dir).mkdirs()
     rdd
       .mapPartitionsWithIndex { (i, it) =>
+        val parts = it.toArray
+        parts.foreach { p =>
+          require(p.wNorm.length == p.adj.length,
+            s"part (${p.blockId}, ${p.partId}): ${p.wNorm.length} weights for ${p.adj.length} edges")
+        }
         val f = new File(dir, f"block-$i%05d")
         val out = new DataOutputStream(
           new BufferedOutputStream(new FileOutputStream(f), 1 << 20))
         var count = 0
-        val parts = it.toArray
         out.writeInt(parts.length)
         parts.foreach { p =>
           out.writeInt(p.blockId); out.writeInt(p.partId)
@@ -56,7 +62,8 @@ object PartIO {
 
   private def readBlockFile(dir: String, block: Int): Array[AdjPart] = {
     val f = new File(dir, f"block-$block%05d")
-    if (!f.isFile) return Array.empty
+    if (!f.isFile)
+      throw new java.io.FileNotFoundException(s"missing adjacency block file ${f.getPath}")
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(f), 1 << 20))
     try {
       val nParts = in.readInt()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, PrefixStudy, TriangleCount}
 
 class GraphAlgoSpec extends GraftSuite {
@@ -8,6 +8,9 @@ class GraphAlgoSpec extends GraftSuite {
 
   private def graphOf(edges: Seq[(Long, Long)], numBlocks: Int = 3): LinkGraph =
     LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = numBlocks)
+
+  /** Every operator on the distributed path. */
+  private val distributedPlan = Residency(driverBytes = 0L)
 
   // 3 disjoint triangles + a 2-chain + 1 isolate-ish pair (FIXTURES.md g_islands)
   private val islands: Seq[(Long, Long)] =
@@ -178,33 +181,26 @@ class GraphAlgoSpec extends GraftSuite {
   test("CC driver-resident regime matches the star-contraction labels exactly") {
     val edges = DenseReference.randomEdges(120, 0.02, seed = 23).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def labelsOf() =
+    def labelsOf(g: LinkGraph) =
       ConnectedComponents.run(g).collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    val resident = labelsOf() // default gate: resident at this size
-    val was = ConnectedComponents.ResidentEdgeBytes
-    ConnectedComponents.ResidentEdgeBytes = 0L
-    try {
-      val distributed = labelsOf()
-      assert(resident == distributed)
-    } finally ConnectedComponents.ResidentEdgeBytes = was
+    val resident = labelsOf(g) // default plan: resident at this size
+    val distributed = labelsOf(g.withResidency(distributedPlan))
+    assert(resident == distributed)
     g.unpersistAll()
   }
 
   test("triangle driver-resident regime matches the distributed self-join exactly") {
     val edges = DenseReference.randomEdges(120, 0.06, seed = 41).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def triOf() = TriangleCount.perVertexTriangles(g)
+    def triOf(g: LinkGraph) = TriangleCount.perVertexTriangles(g)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    def ccOf() = TriangleCount.clusteringCoefficients(g)
+    def ccOf(g: LinkGraph) = TriangleCount.clusteringCoefficients(g)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1).toSeq
-    val (triRes, ccRes) = (triOf(), ccOf()) // default gate: resident at this size
-    val was = TriangleCount.ResidentEdgeBytes
-    TriangleCount.ResidentEdgeBytes = 0L
-    try {
-      assert(triRes == triOf())
-      assert(ccRes == ccOf()) // exact incl. the double coeff: identical op sequence
-    } finally TriangleCount.ResidentEdgeBytes = was
+    val (triRes, ccRes) = (triOf(g), ccOf(g)) // default plan: resident at this size
+    val d = g.withResidency(distributedPlan)
+    assert(triRes == triOf(d))
+    assert(ccRes == ccOf(d)) // exact incl. the double coeff: identical op sequence
     g.unpersistAll()
   }
 
@@ -212,17 +208,9 @@ class GraphAlgoSpec extends GraftSuite {
     val rng = new scala.util.Random(47)
     // sparse external ids (gaps + duplicates) exercise dictionary compaction
     val edges = Seq.fill(400)((rng.nextInt(5000).toLong * 7, rng.nextInt(5000).toLong * 7))
-    def build() = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"))
-    val a = build() // default gates: resident fold (the whole build on the driver)
-    val (wasB, wasF) = (LinkGraph.ResidentBuildBytes, LinkGraph.ResidentFoldRows)
-    LinkGraph.ResidentBuildBytes = 0L // distributed dictionary AND
-    LinkGraph.ResidentFoldRows = 0L // distributed fold: the full cluster build
-    val b =
-      try build()
-      finally {
-        LinkGraph.ResidentBuildBytes = wasB
-        LinkGraph.ResidentFoldRows = wasF
-      }
+    def build(r: Residency) = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), residency = r)
+    val a = build(Residency.Default) // resident fold (the whole build on the driver)
+    val b = build(distributedPlan) // distributed fold AND dictionary: the full cluster build
     assert(a.numVertices == b.numVertices && a.numBlocks == b.numBlocks)
     def dictOf(g: LinkGraph) =
       g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq
@@ -230,13 +218,15 @@ class GraphAlgoSpec extends GraftSuite {
       g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq
     assert(dictOf(a) == dictOf(b))
     assert(edgesOf(a) == edgesOf(b))
-    // ranks bit-identical through the whole downstream pipeline
+    // ranks bit-identical through the whole downstream pipeline (b's
+    // post-build operators re-planned resident, like a's)
+    val bResident = b.withResidency(Residency.Default)
     val ra = PageRank.run(a, tolerance = 0.0, maxIterations = 6)
-    val rb = PageRank.run(b, tolerance = 0.0, maxIterations = 6)
+    val rb = PageRank.run(bResident, tolerance = 0.0, maxIterations = 6)
     val va = ra.toVertexDf(a).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1)
-    val vb = rb.toVertexDf(b).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1)
+    val vb = rb.toVertexDf(bResident).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1)
     assert(va.toSeq == vb.toSeq)
-    ra.free(); rb.free(); a.unpersistAll(); b.unpersistAll()
+    ra.free(); rb.free(); a.unpersistAll(); b.unpersistAll(); bResident.unpersistAll()
   }
 
   test("driver-assembled adjacency parts match the cluster build bit-for-bit") {
@@ -249,20 +239,28 @@ class GraphAlgoSpec extends GraftSuite {
       val v = out.toVertexDf(g).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
       out.free(); v
     }
-    val a = graphOf(edges) // default gate: driver-assembled
+    val a = graphOf(edges) // default plan: driver-assembled
     val (pa, va) = (partsOf(a), ranksOf(a))
-    val was = LinkGraph.ResidentAssembleBytes
-    LinkGraph.ResidentAssembleBytes = 0L // gate is read at lazy-layout build time
-    val (pb, vb) =
-      try {
-        val b = graphOf(edges)
-        val r = (partsOf(b), ranksOf(b))
-        b.unpersistAll()
-        r
-      } finally LinkGraph.ResidentAssembleBytes = was
+    // room for the rank vector (n·8 B) but not for the adjacency (e·16 B):
+    // cluster-built parts under the same resident-regime kernel
+    val b = a.withResidency(Residency(driverBytes = a.numVertices * 8 + 1))
+    val (pb, vb) = (partsOf(b), ranksOf(b))
+    b.unpersistAll()
     assert(pb == pa) // identical keys/offsets/adjacency AND wNorm doubles
     assert(vb == va)
     a.unpersistAll()
+  }
+
+  test("unpersistAll destroys the broadcasts behind driver-assembled adjacency") {
+    val g = graphOf(islands)
+    g.adjParts.count()
+    g.gatherPartsRdd.count()
+    val held = g.laidOutBroadcasts.toList
+    assert(held.size == 2) // one per orientation
+    held.foreach(b => assert(b.value != null))
+    g.unpersistAll()
+    held.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+    assert(g.laidOutBroadcasts.isEmpty)
   }
 
   test("driver-resident degree table matches the join build exactly") {
@@ -280,13 +278,13 @@ class GraphAlgoSpec extends GraftSuite {
       (rows, agg)
     }
     val a = graphOf(edges)
-    val (ra, aa) = rowsAndAgg(a) // default gate: resident
+    val (ra, aa) = rowsAndAgg(a) // default plan: resident
+    // the join build over the SAME dictionary: its partition layout decides
+    // the double aggregation's partial sums
+    val b = a.withResidency(distributedPlan)
+    val (rb, ab) = rowsAndAgg(b)
+    b.unpersistAll()
     a.unpersistAll()
-    val was = LinkGraph.ResidentAssembleBytes
-    LinkGraph.ResidentAssembleBytes = 0L
-    val (rb, ab) =
-      try { val b = graphOf(edges); val r = rowsAndAgg(b); b.unpersistAll(); r }
-      finally LinkGraph.ResidentAssembleBytes = was
     assert(ra == rb)
     assert(aa == ab)
   }
@@ -294,15 +292,11 @@ class GraphAlgoSpec extends GraftSuite {
   test("LPA driver-resident regime matches the distributed supersteps exactly") {
     val edges = DenseReference.randomEdges(60, 0.08, seed = 31).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def labelsOf() =
+    def labelsOf(g: LinkGraph) =
       LabelPropagation.run(g, 4).collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    val resident = labelsOf()
-    val was = LabelPropagation.ResidentEdgeBytes
-    LabelPropagation.ResidentEdgeBytes = 0L
-    try {
-      val distributed = labelsOf()
-      assert(resident == distributed)
-    } finally LabelPropagation.ResidentEdgeBytes = was
+    val resident = labelsOf(g)
+    val distributed = labelsOf(g.withResidency(distributedPlan))
+    assert(resident == distributed)
     g.unpersistAll()
   }
 }

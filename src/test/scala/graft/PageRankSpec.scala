@@ -3,17 +3,20 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 import graft.model._
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 import graft.algo.{DirectSolve, PageRank}
 import graft.engine.PageRankEngine
 
 class PageRankSpec extends GraftSuite {
   import spark.implicits._
 
-  private def graphOf(edges: Seq[(Int, Int, Double)], numBlocks: Int = 3): LinkGraph = {
+  private def graphOf(
+      edges: Seq[(Int, Int, Double)],
+      numBlocks: Int = 3,
+      residency: Residency = Residency.Default): LinkGraph = {
     // expand multiplicity so the builder's duplicate-folding is exercised
     val raw = edges.flatMap { case (s, t, w) => Seq.fill(w.toInt)((s.toLong, t.toLong)) }
-    LinkGraph.fromEdgeList(spark, raw.toDF("src", "dst"), numBlocks = numBlocks)
+    LinkGraph.fromEdgeList(spark, raw.toDF("src", "dst"), numBlocks = numBlocks, residency = residency)
   }
 
   private def ranksArray(g: LinkGraph, out: graft.engine.PageRankOutcome): Array[Double] = {
@@ -64,53 +67,37 @@ class PageRankSpec extends GraftSuite {
     }
   }
 
-  test("distributed (chunk-shuffle) regime matches the resident regime in all three modes") {
-    val saved = PageRankEngine.BroadcastThresholdBytes
-    val n = 50
-    val rawPrior = Array.tabulate(n)(i => 0.001 + (i % 7) * 0.01)
+  /** rand50's ranks in all three modes under one residency plan. */
+  private def runAllModes(residency: Residency): (Array[Double], Array[Double], Array[Double]) = {
+    val rawPrior = Array.tabulate(50)(i => 0.001 + (i % 7) * 0.01)
     def priorDf = rawPrior.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("vid", "value")
-    def runAll(): (Array[Double], Array[Double], Array[Double]) = {
-      val g = graphOf(rand50)
-      val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
-      val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
-      val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
-      g.unpersistAll()
-      (a, b, c)
-    }
-    try {
-      val (r1, d1, k1) = runAll() // resident (n tiny)
-      PageRankEngine.BroadcastThresholdBytes = 0L // force the distributed regime
-      val (r2, d2, k2) = runAll()
-      assertAllClose(r2, r1, 1e-12)
-      assertAllClose(d2, d1, 1e-12)
-      assertAllClose(k2, k1, 1e-12)
-    } finally PageRankEngine.BroadcastThresholdBytes = saved
+    val g = graphOf(rand50, residency = residency)
+    val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
+    val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
+    val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
+    g.unpersistAll()
+    (a, b, c)
+  }
+
+  test("distributed (chunk-shuffle) regime matches the resident regime in all three modes") {
+    val (r1, d1, k1) = runAllModes(Residency.Default) // resident (n tiny)
+    val (r2, d2, k2) = runAllModes(Residency(driverBytes = 0L)) // distributed
+    assertAllClose(r2, r1, 1e-12)
+    assertAllClose(d2, d1, 1e-12)
+    assertAllClose(k2, k1, 1e-12)
   }
 
   test("driver-local gather matches the job-based resident kernel bit-for-bit") {
-    val saved = PageRankEngine.LocalGatherBytes
-    val n = 50
-    val rawPrior = Array.tabulate(n)(i => 0.001 + (i % 7) * 0.01)
-    def priorDf = rawPrior.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("vid", "value")
-    def runAll(): (Array[Double], Array[Double], Array[Double]) = {
-      val g = graphOf(rand50)
-      val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
-      val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
-      val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
-      g.unpersistAll()
-      (a, b, c)
-    }
-    try {
-      val (r1, d1, k1) = runAll() // driver-local gather (edges tiny)
-      PageRankEngine.LocalGatherBytes = 0L // force the broadcast+job+collect path
-      val (r2, d2, k2) = runAll()
-      // EXACT equality, not allClose: the local gather replays the identical
-      // slice arithmetic and accumulation order, so every superstep — and
-      // hence every rank — must be bit-for-bit the job path's
-      assert(r1.toSeq == r2.toSeq)
-      assert(d1.toSeq == d2.toSeq)
-      assert(k1.toSeq == k2.toSeq)
-    } finally PageRankEngine.LocalGatherBytes = saved
+    val (r1, d1, k1) = runAllModes(Residency.Default) // driver-local gather (edges tiny)
+    // room for the rank vector (n·8 B) but not for the local gather (e·16 B):
+    // the broadcast+job+collect path
+    val (r2, d2, k2) = runAllModes(Residency(driverBytes = 50 * 8 + 1))
+    // EXACT equality, not allClose: the local gather replays the identical
+    // slice arithmetic and accumulation order, so every superstep — and
+    // hence every rank — must be bit-for-bit the job path's
+    assert(r1.toSeq == r2.toSeq)
+    assert(d1.toSeq == d2.toSeq)
+    assert(k1.toSeq == k2.toSeq)
   }
 
   test("distributed superstep never moves the adjacency: shuffle volume is rank-sized") {
@@ -118,36 +105,32 @@ class PageRankSpec extends GraftSuite {
     // superstep re-shuffled (or sort-merge-joined) the adjacency, per-superstep
     // shuffle rows would be O(edges); the co-partitioned zipPartitions design
     // bounds them by numBlocks·n pre-combined contribution rows.
-    val saved = PageRankEngine.BroadcastThresholdBytes
-    try {
-      PageRankEngine.BroadcastThresholdBytes = 0L // force the distributed regime
-      val n = 400
-      val edges = DenseReference.randomEdges(n, 0.125, seed = 7)
-      val g = graphOf(edges, numBlocks = 8)
-      val numEdges = g.numEdges
-      assert(numEdges > 10000L, s"fixture should be dense, got $numEdges edges")
+    val n = 400
+    val edges = DenseReference.randomEdges(n, 0.125, seed = 7)
+    val g = graphOf(edges, numBlocks = 8, residency = Residency(driverBytes = 0L))
+    val numEdges = g.numEdges
+    assert(numEdges > 10000L, s"fixture should be dense, got $numEdges edges")
 
-      // layout invariant: partition b of the cached adjacency holds ONLY block b
-      val misplaced = g.adjPartsByBlock
-        .mapPartitionsWithIndex { (pid, it) => it.filter(_._2.blockId != pid).map(_ => 1) }
-        .count()
-      assert(misplaced == 0L, "adjPartsByBlock must be identity-partitioned by blockId")
+    // layout invariant: partition b of the cached adjacency holds ONLY block b
+    val misplaced = g.adjPartsByBlock
+      .mapPartitionsWithIndex { (pid, it) => it.filter(_._2.blockId != pid).map(_ => 1) }
+      .count()
+    assert(misplaced == 0L, "adjPartsByBlock must be identity-partitioned by blockId")
 
-      val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5)
-      val steady = out.metrics.drop(1) // first superstep includes layout builds
-      steady.foreach { m =>
-        val bound = g.numBlocks.toLong * n
-        assert(m.shuffleWriteRows <= bound,
-          s"superstep ${m.superstep}: ${m.shuffleWriteRows} shuffle rows > contribution bound $bound")
-        assert(m.shuffleWriteRows < numEdges / 2,
-          s"superstep ${m.superstep}: shuffle rows ${m.shuffleWriteRows} scale with edges ($numEdges) — adjacency moved")
-      }
-      // and it is still exactly the reference kernel
-      val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 5)
-      assertAllClose(ranksArray(g, out), want, 1e-12)
-      out.free()
-      g.unpersistAll()
-    } finally PageRankEngine.BroadcastThresholdBytes = saved
+    val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5)
+    val steady = out.metrics.drop(1) // first superstep includes layout builds
+    steady.foreach { m =>
+      val bound = g.numBlocks.toLong * n
+      assert(m.shuffleWriteRows <= bound,
+        s"superstep ${m.superstep}: ${m.shuffleWriteRows} shuffle rows > contribution bound $bound")
+      assert(m.shuffleWriteRows < numEdges / 2,
+        s"superstep ${m.superstep}: shuffle rows ${m.shuffleWriteRows} scale with edges ($numEdges) — adjacency moved")
+    }
+    // and it is still exactly the reference kernel
+    val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 5)
+    assertAllClose(ranksArray(g, out), want, 1e-12)
+    out.free()
+    g.unpersistAll()
   }
 
   test("engine is single-shot: a second run fails fast with a clear message") {
@@ -160,23 +143,15 @@ class PageRankSpec extends GraftSuite {
   }
 
   test("slab budget flush: partial contribution slabs still sum to the exact kernel") {
-    val savedThr = PageRankEngine.BroadcastThresholdBytes
-    val savedBudget = PageRankEngine.SlabBudgetBytes
-    try {
-      PageRankEngine.BroadcastThresholdBytes = 0L // distributed regime
-      PageRankEngine.SlabBudgetBytes = 1L // flush after EVERY adjacency part
-      val n = 120
-      val edges = DenseReference.randomEdges(n, 0.15, seed = 23)
-      val g = graphOf(edges, numBlocks = 6)
-      val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 6)
-      val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 6)
-      assertAllClose(ranksArray(g, out), want, 1e-12)
-      out.free()
-      g.unpersistAll()
-    } finally {
-      PageRankEngine.BroadcastThresholdBytes = savedThr
-      PageRankEngine.SlabBudgetBytes = savedBudget
-    }
+    val n = 120
+    val edges = DenseReference.randomEdges(n, 0.15, seed = 23)
+    // distributed regime, flushing after EVERY adjacency part
+    val g = graphOf(edges, numBlocks = 6, residency = Residency(driverBytes = 0L, slabBytes = 1L))
+    val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 6)
+    val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 6)
+    assertAllClose(ranksArray(g, out), want, 1e-12)
+    out.free()
+    g.unpersistAll()
   }
 
   test("dense-by-max id mode sizes the graph as max(id)+1 (original solver semantics)") {

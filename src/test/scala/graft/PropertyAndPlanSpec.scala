@@ -7,7 +7,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.rng.Seed
 
 import graft.algo.{ConnectedComponents, PageRank}
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 import graft.sources.{IcebergLite, RepoFiles}
 
 class PropertyAndPlanSpec extends GraftSuite {
@@ -61,6 +61,38 @@ class PropertyAndPlanSpec extends GraftSuite {
         assert(got == want)
       }
     }
+  }
+
+  test("residency: every operator's default boundary is pinned") {
+    import Residency.Op._
+    val r = Residency.Default
+    val mi = 1L << 20
+    val n = 1000L // inside every per-vertex bound
+    // 16 B/edge operators: resident below 4 Mi folded edges, distributed at it
+    for (op <- Seq(Dictionary, Assembly, DegreeTable, LocalGather, Components, Triangles)) {
+      assert(r.resident(op, n, 4 * mi - 1), op)
+      assert(!r.resident(op, n, 4 * mi), op)
+    }
+    // LPA: e·48 < 64 Mi
+    val lpaMax = (64 * mi - 1) / 48
+    assert(r.resident(LabelPropagation, n, lpaMax) && !r.resident(LabelPropagation, n, lpaMax + 1))
+    // per-vertex: the rank vector below 8 Mi vertices, label hints below 4 Mi
+    assert(r.resident(RankVector, 8 * mi - 1, 0L) && !r.resident(RankVector, 8 * mi, 0L))
+    assert(r.resident(LabelBroadcast, 4 * mi - 1, 0L) && !r.resident(LabelBroadcast, 4 * mi, 0L))
+    // the fold probe is the inclusive case
+    assert(r.foldResident(2 * mi) && !r.foldResident(2 * mi + 1))
+    // driver arrays are Int-indexed, whatever the budget
+    assert(!Residency(driverBytes = Long.MaxValue).resident(Components, Int.MaxValue + 1L, 1L))
+    // a zero budget sends everything to the distributed path and skips the probe
+    assert(!Residency(driverBytes = 0L).resident(RankVector, 1L, 0L))
+    assert(Residency(driverBytes = 0L).foldProbeRows == 0L)
+    // the names the benchmark reports read the same defaults
+    assert(LinkGraph.ResidentFoldRows == 2 * mi)
+    assert(Seq(LinkGraph.ResidentBuildBytes, LinkGraph.ResidentAssembleBytes,
+      graft.engine.PageRankEngine.BroadcastThresholdBytes, graft.engine.PageRankEngine.LocalGatherBytes,
+      ConnectedComponents.ResidentEdgeBytes, graft.algo.LabelPropagation.ResidentEdgeBytes,
+      graft.algo.TriangleCount.ResidentEdgeBytes).forall(_ == 64 * mi))
+    assert(graft.engine.PageRankEngine.SlabBudgetBytes == 256 * mi)
   }
 
   test("fromDenseWeighted auto block count scales with edges, not just vertices") {

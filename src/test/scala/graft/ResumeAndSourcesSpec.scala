@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algo.PageRank
 import graft.engine.{CheckpointManager, PageRankEngine}
-import graft.graph.LinkGraph
+import graft.graph.{LinkGraph, Residency}
 import graft.model.{PageRankConfig, PageRankMode}
 import graft.sources.{EdgeListSource, RepoFiles, SkewedEdges}
 
@@ -148,33 +148,32 @@ class ResumeAndSourcesSpec extends GraftSuite {
     g.gatherPartsRdd.toDS().write.mode("overwrite").parquet(s"$dir/adj-src")
 
     for (distributed <- Seq(true, false)) {
-      val saved = graft.engine.PageRankEngine.BroadcastThresholdBytes
-      if (distributed) graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-      try {
-        // reference computed under the SAME regime — resident and distributed
-        // kernels have different (both deterministic) summation orders
-        val want = PageRank.run(g, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(g).orderBy("vid").collect().map(_.getDouble(1))
-        val p = LinkGraph.fromPrebuiltParts(
-          spark, g.numVertices, g.numBlocks, g.numEdges,
-          dstParts =
-            if (distributed) Some(spark.read.parquet(s"$dir/adj-dst").as[graft.model.AdjPart])
-            else None,
-          gatherParts =
-            if (distributed) None
-            else Some(spark.read.parquet(s"$dir/adj-src").as[graft.model.AdjPart]))
-        assert(p.numEdges == g.numEdges)
-        val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
-        p.unpersistAll()
-        if (distributed) {
-          val maxRel = got.zip(want)
-            .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
-          assert(maxRel < 1e-12, s"prebuilt distributed diverged: maxRel=$maxRel")
-        } else {
-          assert(got.sameElements(want), "prebuilt resident diverged bitwise")
-        }
-      } finally graft.engine.PageRankEngine.BroadcastThresholdBytes = saved
+      val plan = if (distributed) Residency(driverBytes = 0L) else Residency.Default
+      // reference computed under the SAME regime — resident and distributed
+      // kernels have different (both deterministic) summation orders
+      val gr = g.withResidency(plan)
+      val want = PageRank.run(gr, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(gr).orderBy("vid").collect().map(_.getDouble(1))
+      val p = LinkGraph.fromPrebuiltParts(
+        spark, g.numVertices, g.numBlocks, g.numEdges,
+        dstParts =
+          if (distributed) Some(spark.read.parquet(s"$dir/adj-dst").as[graft.model.AdjPart])
+          else None,
+        gatherParts =
+          if (distributed) None
+          else Some(spark.read.parquet(s"$dir/adj-src").as[graft.model.AdjPart]),
+        residency = plan)
+      assert(p.numEdges == g.numEdges)
+      val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
+      p.unpersistAll()
+      if (distributed) {
+        val maxRel = got.zip(want)
+          .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
+        assert(maxRel < 1e-12, s"prebuilt distributed diverged: maxRel=$maxRel")
+      } else {
+        assert(got.sameElements(want), "prebuilt resident diverged bitwise")
+      }
     }
     g.unpersistAll()
   }
@@ -192,31 +191,73 @@ class ResumeAndSourcesSpec extends GraftSuite {
     graft.tools.PartIO.writeBlockFiles(g.gatherPartsRdd, s"$dir/src-bin")
 
     for (distributed <- Seq(true, false)) {
-      val saved = graft.engine.PageRankEngine.BroadcastThresholdBytes
-      if (distributed) graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-      try {
-        val want = PageRank.run(g, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(g).orderBy("vid").collect().map(_.getDouble(1))
-        val p = LinkGraph.fromPrebuiltParts(spark, g.numVertices, g.numBlocks, g.numEdges)
-        if (distributed)
-          p.prebuiltDstPartsLaidOut =
-            Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/dst-bin", g.numBlocks))
-        else
-          p.prebuiltGatherPartsLaidOut =
-            Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/src-bin", g.numBlocks).values)
-        val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
-        p.unpersistAll()
-        if (distributed) {
-          val maxRel = got.zip(want)
-            .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
-          assert(maxRel < 1e-12, s"bin distributed diverged: maxRel=$maxRel")
-        } else {
-          assert(got.sameElements(want), "bin resident diverged bitwise")
-        }
-      } finally graft.engine.PageRankEngine.BroadcastThresholdBytes = saved
+      val plan = if (distributed) Residency(driverBytes = 0L) else Residency.Default
+      val gr = g.withResidency(plan)
+      val want = PageRank.run(gr, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(gr).orderBy("vid").collect().map(_.getDouble(1))
+      val p = LinkGraph.fromPrebuiltParts(
+        spark, g.numVertices, g.numBlocks, g.numEdges, residency = plan)
+      if (distributed)
+        p.prebuiltDstPartsLaidOut =
+          Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/dst-bin", g.numBlocks))
+      else
+        p.prebuiltGatherPartsLaidOut =
+          Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/src-bin", g.numBlocks).values)
+      val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
+      p.unpersistAll()
+      if (distributed) {
+        val maxRel = got.zip(want)
+          .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
+        assert(maxRel < 1e-12, s"bin distributed diverged: maxRel=$maxRel")
+      } else {
+        assert(got.sameElements(want), "bin resident diverged bitwise")
+      }
     }
     g.unpersistAll()
+  }
+
+  test("laid-out restore fails loudly when a block file is missing") {
+    val dir = Files.createTempDirectory("graft-partio-missing").toString
+    val g = LinkGraph.fromEdgeList(spark, rand.toDF("src", "dst"), numBlocks = 3)
+    graft.tools.PartIO.writeBlockFiles(g.gatherPartsRdd, s"$dir/src-bin")
+    val gone = new java.io.File(s"$dir/src-bin", "block-00001")
+    assert(gone.delete())
+    val p = LinkGraph.fromPrebuiltParts(spark, g.numVertices, g.numBlocks, g.numEdges)
+    p.prebuiltGatherPartsLaidOut =
+      Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/src-bin", g.numBlocks).values)
+    val e = intercept[Exception](PageRank.run(p, tolerance = 0.0, maxIterations = 2))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains(gone.getPath)), e.toString)
+    p.unpersistAll()
+    g.unpersistAll()
+  }
+
+  test("repo-file tokens keep every digit above a 1000-token vocabulary") {
+    val files = RepoFiles.table(spark, numRepos = 40, filesPerRepo = 5, vocab = 5000)
+    val extracted = RepoFiles.repoTokens(files)
+      .select($"repo", regexp_extract($"token", "^lib(\\d+)$", 1).cast("int"))
+    val generated = RepoFiles.generatedTokens(files, vocab = 5000)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    val (got, want) = (pairs(extracted), pairs(generated))
+    assert(got.exists(_._2 >= 1000), "no token id ≥ 1000 was extracted")
+    assert(got.toSet == want.toSet)
+    assert(got == want) // every import line, not just the distinct ids
+  }
+
+  test("kernel prep meta is matched field by field, not by substring") {
+    import graft.tools.KernelPrep.{metaField, metaMatches}
+    val meta = """{"n":4000000,"e":20000000,"blocks":64,"folded_edges":19000000}"""
+    assert(metaField(meta, "e").contains(20000000L))
+    assert(metaField(meta, "folded_edges").contains(19000000L))
+    assert(metaField(meta, "x").isEmpty)
+    assert(metaField("""{"folded_e":7}""", "e").isEmpty)
+    assert(metaMatches(meta, 4000000L, 20000000L, 64))
+    // "e":2000000 is a prefix of the recorded "e":20000000
+    assert(!metaMatches(meta, 4000000L, 2000000L, 64))
+    assert(!metaMatches(meta, 400000L, 20000000L, 64))
+    assert(!metaMatches(meta, 4000000L, 20000000L, 6))
   }
 
   test("bench fork helpers survive a failing leg instead of killing the run") {
